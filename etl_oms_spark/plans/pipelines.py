@@ -14,6 +14,7 @@
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -154,24 +155,30 @@ def disease_from_name_str(path: str) -> str:
     return DISEASE_DEFAULT
 
 
-def load_or_init_dims(spark, dims_path: str) -> tuple[DataFrame, DataFrame]:
-    """Load the persisted Pays/Maladie dimensions, or start empty.
+def read_dim_ids(spark, path: str, name_col: str, id_col: str) -> dict:
+    """A persisted dimension as a driver dict ``{name: id}``; ``{}`` when
+    the dim does not exist yet (first run).
 
     The warehouse's id spaces must be stable across pandemics and across
-    runs — the reference loads and grows a single shared pays/region id
-    space from the DB (ETL_OMS_OPERATIONNEL.py run_etl, :276-284). Here
+    runs — the reference loads one shared pays/region id space from the DB
+    into dicts (ETL_OMS_OPERATIONNEL.py run_etl, :229-234, :276-284). Here
     the dims live as tiny parquet tables next to the fact target.
     """
+    try:
+        # the declared schema spares the footer-reading inference job
+        dim = spark.read.schema(f"`{name_col}` STRING, `{id_col}` INT").parquet(path)
+    except AnalysisException:  # first run: the dim does not exist yet
+        return {}
+    return {r[0]: r[1] for r in dim.collect()}
 
-    def _load(name: str, schema: str) -> DataFrame:
-        try:
-            return spark.read.parquet(f"{dims_path}/{name}")
-        except Exception:  # noqa: BLE001 - first run, dim does not exist yet
-            return spark.createDataFrame([], schema)
 
-    pays = _load("pays", "country STRING, id_pays INT")
-    maladie = _load("maladie", "id_maladie INT, nom_maladie STRING")
-    return pays, maladie
+def grow_dim_ids(ids: dict, names) -> dict:
+    """`star.grow_dimension` on the driver: names absent from ``ids`` get
+    contiguous ids after the current max, in name order; NULL names are
+    skipped and assigned ids never change."""
+    new = sorted({n for n in names if n is not None} - ids.keys())
+    top = max(ids.values(), default=0)
+    return {**ids, **{n: top + i for i, n in enumerate(new, 1)}}
 
 
 def warehouse_directory_to_parquet(
@@ -182,44 +189,47 @@ def warehouse_directory_to_parquet(
     dims_path: str | None = None,
 ) -> tuple[DataFrame | None, dict[str, int]]:
     """EP3 directory run with STABLE shared dimensions (the reference's
-    run_etl loop, ETL_OMS_OPERATIONNEL.py:218-369).
+    run_etl loop, ETL_OMS_OPERATIONNEL.py:218-369), in a fixed number of
+    Spark jobs whatever the number of diseases:
 
-    1. scan + reconcile + union the directory (one pass, bilan counters);
-    2. load the persisted Pays/Maladie dims and grow them with the batch's
-       new countries/diseases (anti-join growth — ids never change once
-       assigned, so id_region means the same country in every pandemic and
-       every run);
-    3. build each pandemic's fact against the SHARED dims;
-    4. one merge into the parquet fact keyed ``(id_maladie, id_region,
-       date)`` — id_maladie in the key so two diseases reporting the same
-       region-day never overwrite each other.
+    1. scan + reconcile + union the directory (lazy; bilan from schemas);
+    2. one job collects the batch's distinct (disease, country) pairs; the
+       Pays/Maladie dims are read into dicts, grown on the driver
+       (`grow_dim_ids`: ids never change once assigned, so id_region means
+       the same country in every pandemic and every run), written back;
+    3. one fact plan for every disease: a literal CASE gives id_maladie,
+       the all-zero guard is evaluated per disease and the lag-diff per
+       (disease, country);
+    4. keep-last on (disease, country, date), last being the later file in
+       name order, then the later row of that file (the reference's
+       per-file ON CONFLICT sequence);
+    5. one merge into the parquet fact keyed ``(id_maladie, id_region,
+       date)``, so two diseases reporting the same region-day never
+       overwrite each other.
 
-    Returns ``(unioned updates DataFrame or None, bilan)``.
+    Returns ``(updates DataFrame or None, bilan)``.
     """
     from ..sources.merge_table import merge_into_parquet
-    from ..star import grow_dimension
 
     dims_path = dims_path or target_path.rstrip("/") + "__dims"
     unioned, bilan = run_directory_etl(spark, directory, min_date=min_date)
     if unioned is None:
         return None, bilan
-    unioned = unioned.cache()
 
-    diseases = sorted(
-        r["pandemic"] for r in unioned.select("pandemic").distinct().collect()
+    pairs = unioned.select("pandemic", "country").distinct().collect()
+    diseases = sorted({r["pandemic"] for r in pairs})
+    pays_ids = grow_dim_ids(
+        read_dim_ids(spark, f"{dims_path}/pays", "country", "id_pays"),
+        (r["country"] for r in pairs),
     )
-    pays, maladie = load_or_init_dims(spark, dims_path)
-    # grow, then materialize: the grown dim is read from dims_path and is
-    # about to overwrite it (read-overwrite hazard); dims are tiny.
-    pays = grow_dimension(
-        pays, unioned.select("country"), "country", "id_pays"
-    ).localCheckpoint(eager=True)
-    maladie = grow_dimension(
-        maladie,
-        local_rows(spark, [(d,) for d in diseases], "nom_maladie STRING"),
-        "nom_maladie",
-        "id_maladie",
-    ).localCheckpoint(eager=True)
+    maladie_ids = grow_dim_ids(
+        read_dim_ids(spark, f"{dims_path}/maladie", "nom_maladie", "id_maladie"),
+        diseases,
+    )
+    pays = local_rows(spark, list(pays_ids.items()), "country STRING, id_pays INT")
+    maladie = local_rows(
+        spark, [(i, d) for d, i in maladie_ids.items()], "id_maladie INT, nom_maladie STRING"
+    )
     region = build_region(pays)
     # persist the grown dims BEFORE the fact merge so stored ids are always
     # resolvable even if the fact write fails mid-run
@@ -227,24 +237,28 @@ def warehouse_directory_to_parquet(
     maladie.write.mode("overwrite").parquet(f"{dims_path}/maladie")
     region.write.mode("overwrite").parquet(f"{dims_path}/region")
 
-    disease_ids = {r["nom_maladie"]: r["id_maladie"] for r in maladie.collect()}
-    parts: list[DataFrame] = []
-    for pandemic in diseases:
-        part = unioned.filter(F.col("pandemic") == pandemic)
-        # the guard + lag-diff run per pandemic slice, matching the
-        # reference's per-file processing semantics
-        cleaned = round_geo(derive_daily_columns(part, guard="all_zero"))
-        fact = build_fact(cleaned, pays, region, id_maladie=disease_ids[pandemic])
-        fact = fact.withColumn("__arrival", F.monotonically_increasing_id())
-        fact = keep_last_dedup(
-            fact, ["id_maladie", "id_region", "date"], "__arrival"
-        ).drop("__arrival")
-        parts.append(
-            rollup_statistique(fact, keys=("id_maladie", "id_region", "date"))
-        )
-    updates = parts[0]
-    for p in parts[1:]:
-        updates = updates.unionByName(p)
+    id_maladie = F.lit(None).cast("int")
+    for d in diseases:
+        id_maladie = F.when(F.col("pandemic") == d, maladie_ids[d]).otherwise(id_maladie)
+    # arrival order is read order: file name, then row within the file —
+    # assigned before any shuffle, so the dedup below is deterministic
+    arrived = unioned.withColumn(
+        "__arrival", F.struct("_source_file", F.monotonically_increasing_id())
+    )
+    cleaned = derive_daily_columns(
+        arrived,
+        partition_by=["pandemic", "country"],
+        guard="all_zero",
+        guard_by=["pandemic"],
+    )
+    cleaned = keep_last_dedup(
+        cleaned.withColumn("date", F.col("date").cast("date")),
+        ["pandemic", "country", "date"],
+        "__arrival",
+    ).drop("__arrival")
+    # one row per (id_maladie, id_region, date) already: the keep-last
+    # dedup leaves the pre-load rollup nothing to aggregate
+    updates = build_fact(cleaned, pays, region, id_maladie=id_maladie)
     merge_into_parquet(
         spark,
         target_path,
@@ -252,7 +266,6 @@ def warehouse_directory_to_parquet(
         keys=["id_maladie", "id_region", "date"],
         partition_col="date",
     )
-    unioned.unpersist()
     return updates, bilan
 
 

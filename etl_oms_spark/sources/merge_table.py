@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..merge import merge_dataframes
+from ..util import scoped_conf
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 def merge_into_parquet(
@@ -49,6 +52,9 @@ def merge_into_parquet(
         updates.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
         return
 
+    # the touched-partition list and the merge both read the batch:
+    # evaluate its plan once (bounded by batch size, not table)
+    updates = updates.localCheckpoint(eager=True)
     # distinct partition values in the batch — tiny driver-side list; the
     # IN-filter below partition-prunes the target scan to just those dirs
     touched = [
@@ -60,16 +66,12 @@ def merge_into_parquet(
     # holds only the touched partitions — bounded by batch size, not table.
     merged = merge_dataframes(affected, updates, keys).localCheckpoint(eager=True)
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         (
             merged.write.partitionBy(partition_col)
             .mode("overwrite")  # dynamic: replaces ONLY the touched partitions
             .parquet(target_path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
 
 def compact_partitions(
@@ -88,12 +90,8 @@ def compact_partitions(
         .repartition(F.col(partition_col))
         .localCheckpoint(eager=True)
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         df.write.partitionBy(partition_col).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
 
 
 def _delete_partition_dirs(
@@ -161,6 +159,8 @@ def cdc_merge_into_parquet(
         snap.write.partitionBy(partition_col).mode("overwrite").parquet(target_path)
         return
 
+    # the touched-partition list and the snapshot both read the batch
+    changes = changes.localCheckpoint(eager=True)
     touched = [r[0] for r in changes.select(partition_col).distinct().collect()]
     affected = existing.filter(F.col(partition_col).isin(touched))
     log = affected.select(
@@ -178,16 +178,12 @@ def cdc_merge_into_parquet(
     }
     emptied = [v for v in touched if v not in present]
 
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         (
             merged.write.partitionBy(partition_col)
             .mode("overwrite")
             .parquet(target_path)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
     if emptied:
         _delete_partition_dirs(spark, target_path, partition_col, emptied)
 
@@ -239,11 +235,8 @@ def refresh_aggregate(
         )
     except Exception:  # noqa: BLE001 - bootstrap: no table yet
         merged = partials
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    with scoped_conf(spark, _OVERWRITE_MODE, "dynamic"):
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(agg_path)
-        return
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(agg_path)
 
 
 def vacuum_table(path: str) -> dict:

@@ -300,13 +300,15 @@ def ingest_new_files(
     """
     from pyspark.sql import functions as F
 
+    from ..util import empty_frame
+
     df = read_any(spark, path, fmt=fmt, schema=schema, **options).withColumn(
         "__file", F.input_file_name()
     )
     try:
         seen = spark.read.parquet(ledger_path).select("file")
     except Exception:  # noqa: BLE001 - first run: no ledger yet
-        seen = spark.createDataFrame([], "file STRING")
+        seen = empty_frame(spark, "file STRING")
     fresh = df.join(
         F.broadcast(seen), df["__file"] == seen["file"], "left_anti"
     )

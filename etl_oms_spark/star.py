@@ -23,7 +23,7 @@ Scale notes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -75,13 +75,15 @@ def build_fact(
     df: DataFrame,
     pays: DataFrame,
     region: DataFrame,
-    id_maladie: int = 1,
+    id_maladie: int | Column = 1,
 ) -> DataFrame:
     """``Statistique`` fact: broadcast dim joins + rename (J1/J2/P8).
 
     fact × Pays on country (J1, ETL_OMS_FINAL.py:88) then × Region on
     ``(id_pays, country=nom_region)`` (J2, :89), measures renamed to the
     French output names (P8, :93-98). Dims are broadcast → no fact shuffle.
+    ``id_maladie`` is one disease id, or a Column over ``df`` giving each
+    row's id (a multi-disease batch).
     """
     joined = df.join(F.broadcast(pays), "country", "inner")
     joined = joined.join(

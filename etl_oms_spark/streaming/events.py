@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import scoped_conf
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -481,16 +483,9 @@ def single_run_sentinel_flush(
         schema = spark.read.parquet(src).schema
     # the flush rides on the trailing no-data batch; that batch only
     # exists while this (default-on) knob is on, so pin it for the run
-    # rather than inherit whatever the session was configured with —
-    # and RESTORE the caller's value afterwards (session-config hygiene,
-    # VERDICT r13 item 5: a helper must not leak a global setting)
-    _knob = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        _saved = spark.conf.get(_knob)
-    except Exception:  # noqa: BLE001 - unset → restore to unset
-        _saved = None
-    spark.conf.set(_knob, "true")
-    try:
+    # rather than inherit whatever the session was configured with, and
+    # leave the caller's setting (or its absence) as it was afterwards
+    with scoped_conf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "true"):
         stream = spark.readStream.schema(schema).parquet(src)
         q = (
             build(stream)
@@ -502,8 +497,3 @@ def single_run_sentinel_flush(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if _saved is None:
-            spark.conf.unset(_knob)
-        else:
-            spark.conf.set(_knob, _saved)

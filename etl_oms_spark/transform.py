@@ -128,6 +128,7 @@ def derive_daily_columns(
     partition_by: list[str] | None = None,
     order_by: list[str] | None = None,
     guard: str = "all_null",
+    guard_by: list[str] | None = None,
 ) -> DataFrame:
     """Conditionally derive daily columns from cumulative series (W1+A4/A5).
 
@@ -136,10 +137,15 @@ def derive_daily_columns(
     zero/NULL (``guard="all_zero"``, v4: ETL_OMS_OPERATIONNEL.py:141-144),
     replace it with the per-group lag-diff of the cumulative column.
 
-    One-plan guard: the whole-table predicate is computed as a scalar aggregate
-    and broadcast-cross-joined back (SURVEY §4 item 3) — a distributed
-    aggregate plus a zero-cost broadcast instead of an eager ``.all()``
-    action per column, and no single-partition global window.
+    "Entirely" is judged per ``guard_by`` group (several files' worth of
+    rows, one guard per file's disease, in one plan); an empty or None
+    ``guard_by`` makes the whole frame one group.
+
+    One-plan guard: the predicate is one aggregate grouped by ``guard_by``
+    (a single row when there are no groups), broadcast-joined back (SURVEY
+    §4 item 3) — a distributed aggregate plus a zero-cost broadcast instead
+    of an eager ``.all()`` action per column, and no single-partition
+    global window.
     """
     cumulative_to_daily = cumulative_to_daily or {
         "confirmed": "new_cases",
@@ -164,9 +170,14 @@ def derive_daily_columns(
     if not aggs:
         return df
 
-    flags = df.agg(*aggs)
     dtypes = dict(df.dtypes)
-    out = df.crossJoin(F.broadcast(flags))
+    # the group columns come back renamed: flags derives from df, so the
+    # original names would be ambiguous in the join condition; with no
+    # groups the join has no condition (a broadcast cross join of one row)
+    keys = {c: f"__g_{c}" for c in guard_by or []}
+    flags = df.groupBy(*[F.col(c).alias(k) for c, k in keys.items()]).agg(*aggs)
+    on = [F.col(c).eqNullSafe(F.col(k)) for c, k in keys.items()]
+    out = df.join(F.broadcast(flags), on or None).drop(*keys.values())
     for cum, daily in cumulative_to_daily.items():
         flag = f"__nz_{daily}"
         if flag not in out.columns:
